@@ -126,22 +126,29 @@ object Bench {
         require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
         inventory0.filter(q => want.contains(q._1))
       }
+    // a query that fails in any pass records NO timing: its
+    // time-to-failure inside the total would read as a speedup. It
+    // lands in the artifact's `failed` list instead, which benchgate
+    // refuses.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val timesByPass = (1 to passes).map { pass =>
-      inventory.map { case (name, fn) =>
+      inventory.flatMap { case (name, fn) =>
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          val dt = (System.nanoTime() - t0) / 1e9
+          System.err.println(f"[bench] pass $pass $name%-28s $dt%8.2f s")
+          Some(name -> dt)
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+          None
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] pass $pass $name%-28s $dt%8.2f s")
-        name -> dt
-      }
+      }.toMap
     }
     // per-query minimum over the passes — the noise-floor estimate
-    val results = inventory.map(_._1).map { name =>
-      name -> timesByPass.map(_.toMap.apply(name)).min
-    }
+    val timed = inventory.map(_._1).filterNot(failed)
+    val results = timed.map(name => name -> timesByPass.map(_(name)).min)
     def fmt(v: Double): String = f"$v%.3f"
     def qmap(entries: Seq[(String, Double)]): String =
       entries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
@@ -196,13 +203,14 @@ object Bench {
     // `materialized` build shows pass1 >> pass2, and the reported
     // minimum is explicitly the warm incremental cost (BASELINE.md's
     // long-standing protocol, now self-documenting in the artifact)
-    val passJson = inventory.map(_._1).map { name =>
+    val passJson = timed.map { name =>
       "\"" + name + "\":[" +
-        timesByPass.map(p => fmt(p.toMap.apply(name))).mkString(",") +
-        "]"
+        timesByPass.map(p => fmt(p(name))).mkString(",") + "]"
     }.mkString("{", ",", "}")
+    val failedJson =
+      failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fileJson = fullJson.dropRight(1) +
-      s""","pass_sec":$passJson}"""
+      s""","pass_sec":$passJson,"failed":$failedJson}"""
     if (args.isEmpty)
       try java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
         (fileJson + "\n").getBytes("UTF-8"))

@@ -1901,29 +1901,8 @@ class ManifestReplaceWrite(schema: StructType,
   require(!schema.fieldNames.contains("_graft_file"),
     "row-level replacement rows must not carry the metadata column")
   private val nonce = java.util.UUID.randomUUID().toString.take(12)
-  // zone columns every LIVE file carries (intersection is
-  // conservative vs the replaced subset's — recording fewer columns
-  // only costs pruning opportunity, never correctness), restricted
-  // to columns present in the replacement schema; partition columns
-  // the same way (partition cols live IN the data, so the split
-  // writer can re-derive each output's tuple)
-  private val (statsCols: Seq[String], partCols: Seq[String]) = {
-    val pinned = ManifestV2.resolvePinned(opts)
-    val root = java.nio.file.Paths.get(opts.path)
-    val rels = pinned.slices.map(s =>
-      root.relativize(java.nio.file.Paths.get(s.path)).toString)
-    val sc =
-      if (rels.isEmpty) Seq.empty[String]
-      else rels.map(f =>
-          (pinned.stats.getOrElse(f, Seq.empty).map(_._1) ++
-            pinned.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
-        .reduce(_ intersect _).toSeq.sorted
-        .filter(schema.fieldNames.contains)
-    val pc = ManifestV2.partitionColsOf(pinned)
-      .filter(spec => schema.fieldNames
-        .contains(ManifestBucket.column(spec)))
-    (sc, pc)
-  }
+  private val (statsCols: Seq[String], partCols: Seq[String]) =
+    ManifestCommit.rowLevelCols(opts, schema)
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
@@ -1936,49 +1915,19 @@ class ManifestReplaceWrite(schema: StructType,
     val replaced = op.scan.replacedFiles
     val files = ManifestCommit.taskFiles(msgs)
     if (replaced.isEmpty && files.isEmpty) return // no-op operation
-    var staged = files.map(_.rel).toSeq
-    var rows = files.map(f => f.rel -> f.rows).toMap
-    if (staged.isEmpty) {
-      // the operation deleted every row of the replaced files and
-      // nothing else survives alongside: keep the snapshot readable
-      val rel = s"data/w-$nonce/part-$nonce-empty.parquet"
-      val abs = java.nio.file.Paths.get(opts.path).resolve(rel)
-      ManifestParquet.openWriter(abs,
-        ManifestParquet.messageTypeOf(schema)).close()
-      staged = Seq(rel)
-      rows = Map(rel -> 0L)
-    }
-    val stats = files.flatMap { f =>
-      val entries = statsCols.flatMap(c =>
-        f.stats.get(c).map { case (mn, mx) => (c, mn, mx) })
-      if (entries.isEmpty) None else Some(f.rel -> entries)
-    }.toMap
-    val sstats = files.flatMap { f =>
-      val entries = statsCols.flatMap(c =>
-        f.sstats.get(c).map { case (mn, mx) => (c, mn, mx) })
-      if (entries.isEmpty) None else Some(f.rel -> entries)
-    }.toMap
-    val root = java.nio.file.Paths.get(opts.path)
-    val expectDvs = op.scan.pinned.slices.map(s =>
-      root.relativize(java.nio.file.Paths.get(s.path)).toString ->
-        s.dv.toSeq).toMap
-    val pvals = files.flatMap(f =>
-      if (f.pvals.isEmpty) None else Some(f.rel -> f.pvals)).toMap
-    ManifestTable.publishReplace(opts.path, replaced, staged, stats,
-      sstats, rows, expectDvs, pvals)
+    // the operation deleted every row of the replaced files and
+    // nothing else survives alongside: keep the snapshot readable
+    val staged =
+      if (files.nonEmpty) files
+      else Seq(ManifestCommit.emptyFile(opts.path, schema, nonce))
+    ManifestTable.publishReplace(opts.path, replaced, staged.map(_.rel),
+      ManifestCommit.metaOf(staged, statsCols),
+      ManifestCommit.pinnedDvs(opts.path, op.scan.pinned))
     ()
   }
 
-  override def abort(msgs: Array[WriterCommitMessage]): Unit = {
-    val dir = java.nio.file.Paths.get(opts.path, "data", s"w-$nonce")
-    if (java.nio.file.Files.isDirectory(dir)) {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.walk(dir)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-    }
-  }
+  override def abort(msgs: Array[WriterCommitMessage]): Unit =
+    ManifestCommit.dropStaging(opts.path, nonce)
 }
 
 /** Parquet message type for the DSv2 writer AND the empty-overwrite
@@ -2138,72 +2087,113 @@ class ManifestWriteBuilder(schema: StructType,
   }
 }
 
-/** Job-level commit bookkeeping the batch AND streaming writes
-  * share: collect the tasks' staged files, fold their streamed
-  * min/max into `#stats=`/`#sstats=` lines, their partition tuples
-  * into `#pval=` lines, and publish ONE atomic version. */
+/** Job-level commit bookkeeping every DSv2 write shares — batch,
+  * streaming, the copy-on-write replacement and the merge-on-read
+  * delta: collect the tasks' staged files, convert their streamed
+  * bounds, sketches, counts and partition tuples into manifest
+  * metadata, and publish ONE atomic version. */
 private[sources] object ManifestCommit {
   import org.apache.spark.sql.connector.write.WriterCommitMessage
 
+  /** Every file the tasks staged (appends, partitioned splits, the
+    * delta writers' inserts), sorted; empty tasks report none. */
   def taskFiles(msgs: Array[WriterCommitMessage])
       : Seq[ManifestTaskFile] =
     msgs.toSeq.flatMap {
       case f: ManifestTaskFile => Seq(f)
       case s: ManifestTaskFileSet => s.files
+      case d: ManifestDeltaTaskResult => d.inserts
       case _ => Seq.empty
     }.filter(_.rel.nonEmpty).sortBy(_.rel)
+
+  /** The ONE conversion of task-reported files into manifest
+    * metadata: `#stats=`/`#sstats=` zones and `#ndv=` sketches for
+    * `statsCols`, exact `#nrows=` counts and `#pval=` tuples. */
+  def metaOf(files: Seq[ManifestTaskFile],
+      statsCols: Seq[String]): ManifestTable.Meta = {
+    def per[V, E](get: ManifestTaskFile => Map[String, V])
+        (mk: (String, V) => E): Map[String, Seq[E]] =
+      files.flatMap { f =>
+        val es = statsCols.flatMap(c => get(f).get(c).map(mk(c, _)))
+        if (es.isEmpty) None else Some(f.rel -> es)
+      }.toMap
+    ManifestTable.Meta(
+      stats = per(_.stats)((c, v) => (c, v._1, v._2)),
+      sstats = per(_.sstats)((c, v) => (c, v._1, v._2)),
+      rows = files.map(f => f.rel -> f.rows).toMap,
+      ndvs = per(_.ndvs)((c, v) => (c, v._1, v._2, v._3)),
+      pvals = files.filter(_.pvals.nonEmpty)
+        .map(f => f.rel -> f.pvals).toMap)
+  }
+
+  /** Stage one explicit EMPTY file under the job's prefix — what a
+    * truncating overwrite of nothing, or a row-level replacement that
+    * deleted every row, publishes so the snapshot keeps its schema
+    * and an exact zero count. */
+  def emptyFile(path: String, schema: StructType,
+      nonce: String): ManifestTaskFile = {
+    val rel = s"data/w-$nonce/part-$nonce-empty.parquet"
+    ManifestParquet.openWriter(java.nio.file.Paths.get(path).resolve(rel),
+      ManifestParquet.messageTypeOf(schema)).close()
+    ManifestTaskFile(rel, 0L, Map.empty, Map.empty)
+  }
 
   def publish(path: String, schema: StructType,
       statsCols: Seq[String], append: Boolean, nonce: String,
       files: Seq[ManifestTaskFile], tag: Option[String]): Unit = {
-    if (files.isEmpty) {
-      // append of nothing publishes nothing; OVERWRITE of nothing
-      // must still truncate (Spark/Delta semantics) — publish a
-      // snapshot holding one explicit empty file so the table reads
-      // as zero rows with its schema intact and countRows stays
-      // exact. A column-less frame has nothing stageable: no-op.
-      if (append || schema.isEmpty) return
-      val rel = s"data/w-$nonce/part-$nonce-empty.parquet"
-      val abs = java.nio.file.Paths.get(path).resolve(rel)
-      ManifestParquet.openWriter(abs,
-        ManifestParquet.messageTypeOf(schema)).close()
-      ManifestTable.publishStaged(path, Seq(rel), Map.empty,
-        Map(rel -> 0L), append = false)
-      return
-    }
-    val stats = files.flatMap { f =>
-      val entries = statsCols.flatMap(c =>
-        f.stats.get(c).map { case (mn, mx) => (c, mn, mx) })
-      if (entries.isEmpty) None else Some(f.rel -> entries)
-    }.toMap
-    val sstats = files.flatMap { f =>
-      val entries = statsCols.flatMap(c =>
-        f.sstats.get(c).map { case (mn, mx) => (c, mn, mx) })
-      if (entries.isEmpty) None else Some(f.rel -> entries)
-    }.toMap
-    val pvals = files.flatMap(f =>
-      if (f.pvals.isEmpty) None else Some(f.rel -> f.pvals)).toMap
-    val ndvs = files.flatMap { f =>
-      val entries = statsCols.flatMap(c =>
-        f.ndvs.get(c).map { case (nulls, regs, hist) =>
-          (c, nulls, regs, hist) })
-      if (entries.isEmpty) None else Some(f.rel -> entries)
-    }.toMap
-    ManifestTable.publishStaged(path, files.map(_.rel),
-      stats, files.map(f => f.rel -> f.rows).toMap, append, sstats,
-      pvals, tag, ndvs)
+    // append of nothing publishes nothing; OVERWRITE of nothing must
+    // still truncate (Spark/Delta semantics) — publish a snapshot
+    // holding one explicit empty file. A column-less frame has
+    // nothing stageable: no-op.
+    if (files.isEmpty && (append || schema.isEmpty)) return
+    val staged =
+      if (files.nonEmpty) files else Seq(emptyFile(path, schema, nonce))
+    ManifestTable.publishStaged(path, staged.map(_.rel),
+      metaOf(staged, statsCols), append, tag)
     ()
   }
 
-  def dropStaging(path: String, nonce: String): Unit = {
-    val dir = java.nio.file.Paths.get(path, "data", s"w-$nonce")
-    if (java.nio.file.Files.isDirectory(dir)) {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.walk(dir)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-    }
+  def dropStaging(path: String, nonce: String): Unit =
+    ManifestTable.deleteRecursively(
+      java.nio.file.Paths.get(path, "data", s"w-$nonce"))
+
+  /** The zone and partition columns a row-level write (copy-on-write
+    * replacement or merge-on-read delta) records: zone columns every
+    * LIVE file carries (the intersection is conservative vs the
+    * replaced subset's — recording fewer columns only costs pruning
+    * opportunity, never correctness) and the snapshot's partition
+    * columns, both restricted to columns the written rows carry
+    * (partition columns live IN the data, so the split writer can
+    * re-derive each output's tuple). */
+  def rowLevelCols(opts: ManifestV2Options, schema: StructType)
+      : (Seq[String], Seq[String]) = {
+    val pinned = ManifestV2.resolvePinned(opts)
+    val rels = relsOf(opts.path, pinned)
+    val sc =
+      if (rels.isEmpty) Seq.empty[String]
+      else rels.map(f =>
+          (pinned.stats.getOrElse(f, Seq.empty).map(_._1) ++
+            pinned.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
+        .reduce(_ intersect _).toSeq.sorted
+        .filter(schema.fieldNames.contains)
+    val pc = ManifestV2.partitionColsOf(pinned)
+      .filter(spec => schema.fieldNames
+        .contains(ManifestBucket.column(spec)))
+    (sc, pc)
+  }
+
+  /** The deletion vectors an operation's scan pinned, per
+    * manifest-relative file — what the publish's conflict check
+    * expects to still find. */
+  def pinnedDvs(path: String,
+      pinned: ManifestV2.Pinned): Map[String, Seq[Long]] =
+    relsOf(path, pinned).zip(pinned.slices.map(_.dv.toSeq)).toMap
+
+  private def relsOf(path: String, pinned: ManifestV2.Pinned)
+      : Seq[String] = {
+    val root = java.nio.file.Paths.get(path)
+    pinned.slices.map(s =>
+      root.relativize(java.nio.file.Paths.get(s.path)).toString)
   }
 }
 

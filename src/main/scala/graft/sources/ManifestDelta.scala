@@ -149,23 +149,8 @@ class ManifestDeltaBatchWrite(info: LogicalWriteInfo,
 
   // zone/partition columns: same conservative intersection the CoW
   // replacement write records (inserts keep the snapshot prunable)
-  private val (statsCols: Seq[String], partCols: Seq[String]) = {
-    val pinned = ManifestV2.resolvePinned(opts)
-    val root = java.nio.file.Paths.get(opts.path)
-    val rels = pinned.slices.map(s =>
-      root.relativize(java.nio.file.Paths.get(s.path)).toString)
-    val sc =
-      if (rels.isEmpty) Seq.empty[String]
-      else rels.map(f =>
-          (pinned.stats.getOrElse(f, Seq.empty).map(_._1) ++
-            pinned.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
-        .reduce(_ intersect _).toSeq.sorted
-        .filter(schema.fieldNames.contains)
-    val pc = ManifestV2.partitionColsOf(pinned)
-      .filter(spec => schema.fieldNames
-        .contains(ManifestBucket.column(spec)))
-    (sc, pc)
-  }
+  private val (statsCols: Seq[String], partCols: Seq[String]) =
+    ManifestCommit.rowLevelCols(opts, schema)
 
   override def createBatchWriterFactory(
       pinfo: PhysicalWriteInfo): DeltaWriterFactory =
@@ -175,35 +160,18 @@ class ManifestDeltaBatchWrite(info: LogicalWriteInfo,
   override def commit(msgs: Array[WriterCommitMessage]): Unit = {
     require(op.scan != null,
       "delta write committed without the operation's scan")
-    val results = msgs.toSeq.collect {
-      case r: ManifestDeltaTaskResult => r }
-    val inserts = results.flatMap(_.inserts).filter(_.rel.nonEmpty)
-      .sortBy(_.rel)
-    val deletes = results.flatMap(_.deletes.toSeq)
+    val inserts = ManifestCommit.taskFiles(msgs)
+    val deletes = msgs.toSeq.collect { case r: ManifestDeltaTaskResult => r }
+      .flatMap(_.deletes.toSeq)
       .groupBy(_._1).view
       .mapValues(_.flatMap(_._2).distinct.sorted.toSeq).toMap
     if (inserts.isEmpty && deletes.isEmpty) return // no-op operation
-    val stats = inserts.flatMap { f =>
-      val entries = statsCols.flatMap(c =>
-        f.stats.get(c).map { case (mn, mx) => (c, mn, mx) })
-      if (entries.isEmpty) None else Some(f.rel -> entries)
-    }.toMap
-    val sstats = inserts.flatMap { f =>
-      val entries = statsCols.flatMap(c =>
-        f.sstats.get(c).map { case (mn, mx) => (c, mn, mx) })
-      if (entries.isEmpty) None else Some(f.rel -> entries)
-    }.toMap
-    val pvals = inserts.flatMap(f =>
-      if (f.pvals.isEmpty) None else Some(f.rel -> f.pvals)).toMap
-    val root = java.nio.file.Paths.get(opts.path)
-    val expectDvs = op.scan.pinned.slices.map(s =>
-      root.relativize(java.nio.file.Paths.get(s.path)).toString ->
-        s.dv.toSeq).toMap
+    val meta = ManifestCommit.metaOf(inserts, statsCols)
     ManifestTable.applyDeltaCommit(
       org.apache.spark.sql.SparkSession.active, opts.path,
-      deletes, inserts.map(_.rel),
-      stats, sstats, inserts.map(f => f.rel -> f.rows).toMap, pvals,
-      expectDvs, opts.dvMaxFraction)
+      deletes, inserts.map(_.rel), meta.stats, meta.sstats, meta.rows,
+      meta.pvals, ManifestCommit.pinnedDvs(opts.path, op.scan.pinned),
+      opts.dvMaxFraction, ndvs = meta.ndvs)
     ()
   }
 
@@ -242,15 +210,10 @@ final case class ManifestDeltaWriterFactory(schema: StructType,
 
       override def insert(row: InternalRow): Unit = inner.write(row)
 
-      override def commit(): WriterCommitMessage = {
-        val files = inner.commit() match {
-          case f: ManifestTaskFile => Seq(f)
-          case s: ManifestTaskFileSet => s.files
-          case _ => Seq.empty
-        }
-        ManifestDeltaTaskResult(files,
+      override def commit(): WriterCommitMessage =
+        ManifestDeltaTaskResult(
+          ManifestCommit.taskFiles(Array(inner.commit())),
           deletes.view.mapValues(_.toSeq).toMap)
-      }
 
       override def abort(): Unit = inner.abort()
       override def close(): Unit = inner.close()

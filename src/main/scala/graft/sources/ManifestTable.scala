@@ -11,7 +11,8 @@ import scala.util.Using
   * re-expressed on plain parquet):
   *
   *  - every commit stages its data files under a fresh writer-unique
-  *    `data/s-<nonce>/` prefix (never touching earlier files),
+  *    `data/<kind>-<nonce>/` prefix (never touching earlier files —
+  *    [[stageFrame]]),
   *  - then publishes ONE manifest file `_manifests/v<version>` listing
   *    every live data file of the snapshot, via a PUT-IF-ABSENT
   *    primitive (write-temp + hard-link-into-place: `createLink`
@@ -80,7 +81,7 @@ object ManifestTable {
     * MICROSECONDS — the canonical integer encodings, so the same
     * int64 range arithmetic prunes all three (the predicate side
     * encodes its literals identically — [[readPrunedTyped]]). */
-  private type Stats = Map[String, Seq[(String, Long, Long)]]
+  private[sources] type Stats = Map[String, Seq[(String, Long, Long)]]
 
   private val noStats: Stats = Map.empty
 
@@ -96,7 +97,7 @@ object ManifestTable {
     * an un-incrementable max (all 0xFF) publishes no line and the
     * file always scans. Skipping stays an optimization, never a
     * filter. */
-  private type SStats = Map[String, Seq[(String, String, String)]]
+  private[sources] type SStats = Map[String, Seq[(String, String, String)]]
 
   private val noSStats: SStats = Map.empty
 
@@ -112,7 +113,7 @@ object ManifestTable {
     * integer list keeps the manifest honest at this scale and the
     * cap forces the copy-on-write fallback exactly where a bitmap
     * would stop paying. */
-  private type Dvs = Map[String, Seq[Long]]
+  private[sources] type Dvs = Map[String, Seq[Long]]
 
   private val noDvs: Dvs = Map.empty
 
@@ -156,25 +157,31 @@ object ManifestTable {
 
   private[sources] val noNdvs: Ndvs = Map.empty
 
-  private val emptyManifest =
-    Manifest(Seq.empty, noStats, Map.empty, noDvs, noSStats, noPvals,
-      noNdvs)
-
-  /** One parsed manifest: data-file list, per-file zone stats
-    * (`#stats=path|col|min|max` lines), per-file row counts
-    * (`#nrows=path|n` lines — [[commitWithStats]] records them from
-    * the same distributed pass as the zones; files committed without
-    * the pass have no entry), per-file deletion vectors
-    * (`#dv=path|positions` lines; `#nrows` stays the PHYSICAL row
-    * count — live rows = nrows − |dv|), and per-file STRING zone
-    * stats (`#sstats=` lines). */
-  private final case class Manifest(files: Seq[String], stats: Stats,
-      rows: Map[String, Long], dvs: Dvs, sstats: SStats,
-      pvals: Pvals, ndvs: Ndvs) {
-    def metaLinesFor(fs: Seq[String]): Seq[String] =
-      ManifestTable.metaLines(fs, stats, rows, dvs, sstats, pvals,
-        ndvs)
+  /** The IMMUTABLE per-file metadata of a set of files — every
+    * comment-line kind but the deletion vectors, which are the one
+    * part of a file's metadata a later commit may change. Writers
+    * build one per staged batch, and `++` unions two batches. */
+  private[sources] final case class Meta(stats: Stats = noStats,
+      sstats: SStats = noSStats, rows: Map[String, Long] = Map.empty,
+      ndvs: Ndvs = noNdvs, pvals: Pvals = noPvals) {
+    def ++(o: Meta): Meta = Meta(stats ++ o.stats, sstats ++ o.sstats,
+      rows ++ o.rows, ndvs ++ o.ndvs, pvals ++ o.pvals)
   }
+
+  /** One parsed manifest: data-file list, per-file [[Meta]] (zone
+    * stats, row counts, NDV sketches, partition values) and per-file
+    * deletion vectors (`#dv=path|positions` lines; `#nrows` stays the
+    * PHYSICAL row count — live rows = nrows − |dv|). */
+  private final case class Manifest(files: Seq[String], meta: Meta,
+      dvs: Dvs) {
+    def stats: Stats = meta.stats
+    def sstats: SStats = meta.sstats
+    def rows: Map[String, Long] = meta.rows
+    def ndvs: Ndvs = meta.ndvs
+    def pvals: Pvals = meta.pvals
+  }
+
+  private val emptyManifest = Manifest(Seq.empty, Meta(), noDvs)
 
   /** One manifest read parsed into [[Manifest]]: data lines are
     * relative paths; comment lines carry the file metadata. The zone
@@ -232,7 +239,7 @@ object ManifestTable {
           if (q.length > 4) q(4) else ""))
       }
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    Manifest(files, stats, rows, dvs, sstats, pvals, ndvs)
+    Manifest(files, Meta(stats, sstats, rows, ndvs, pvals), dvs)
   }
 
   private def filesOf(table: String, version: Long): Seq[String] =
@@ -265,30 +272,33 @@ object ManifestTable {
       m.ndvs)
   }
 
-  /** Publish files the CALLER's tasks already staged as the next
-    * snapshot — the seam the DSv2 write path ([[ManifestV2]]) commits
-    * through: Spark's job-level `BatchWrite.commit` maps onto exactly
-    * ONE optimistic manifest publish, so the whole distributed write
-    * is atomic (readers see all of the job's files or none — the same
-    * contract [[commitWithStats]] gives the Scala API). Same
-    * append/carry semantics and put-if-absent loop. */
+  /** Publish already-staged files as the next snapshot — one of the
+    * TWO publish primitives every writer commits through (the other
+    * is [[publishReplace]]); the Scala API's [[commitTagged]] /
+    * [[commitWithStats]] and the DSv2 batch and streaming writes
+    * ([[ManifestV2]]: Spark's job-level `BatchWrite.commit` maps onto
+    * exactly ONE optimistic publish, so the whole distributed write is
+    * atomic). `append = true` carries the previous snapshot's files
+    * forward with all their metadata lines — dropping a `#dv=` line
+    * would RESURRECT merge-on-read deletes; `false` makes `staged`
+    * the whole snapshot (atomic overwrite). A TAGGED publish is
+    * IDEMPOTENT: a replay whose tag is already published
+    * short-circuits to that version — the exactly-once seam the
+    * streaming sinks commit epochs through. */
   private[sources] def publishStaged(table: String,
-      staged: Seq[String],
-      stats: Map[String, Seq[(String, Long, Long)]],
-      rows: Map[String, Long], append: Boolean,
-      sstats: Map[String, Seq[(String, String, String)]] = noSStats,
-      pvals: Map[String, Seq[(String, String)]] = noPvals,
-      tag: Option[String] = None,
-      ndvs: Ndvs = noNdvs): Long = {
+      staged: Seq[String], meta: Meta, append: Boolean,
+      tag: Option[String] = None): Long = {
     require(staged.nonEmpty, "publishStaged needs at least one file")
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
-    publishLoop(table, nonce, "publishStaged") { snapshot =>
-      // tagged publishes are IDEMPOTENT: a replay whose tag is
-      // already published short-circuits to that version — the
-      // exactly-once seam the DSv2 streaming sink commits epochs
-      // through (same discipline as commitTagged)
-      tag.flatMap(t =>
-          snapshot.find(v => tagOf(table, v).contains(t))) match {
+    // tag check + version derivation share ONE versions() snapshot per
+    // attempt. With separate reads there is a TOCTOU: a rival publishes
+    // tag T at vN between our tag check and our prev read, we then see
+    // vN as prev and link v(N+1) with the same tag — double-append.
+    // With one snapshot, publishing v(N+1) REQUIRES having observed
+    // vN, and the tag check ran over that same list; a rival landing
+    // after the snapshot makes our createLink lose, and the retry's
+    // fresh snapshot sees its tag.
+    publishLoop(table, "publishStaged") { snapshot =>
+      taggedIn(table, tag, snapshot) match {
         case Some(v) => Left(v)
         case None =>
           val prev =
@@ -297,56 +307,95 @@ object ManifestTable {
                 .getOrElse(emptyManifest)
             else emptyManifest
           Right(tag.map(t => s"#tag=$t").toSeq ++
-            prev.metaLinesFor(prev.files) ++
-            metaLines(staged, stats, rows, sstats = sstats,
-              pvals = pvals, ndvs = ndvs) ++
-            prev.files ++ staged)
+            snapshotLines(table, prev.files, prev.meta, prev.dvs,
+              staged, meta))
       }
     }
   }
 
-  /** Publish a GROUP REPLACEMENT as the next snapshot — the seam the
-    * SQL row-level operations (MERGE INTO / UPDATE / rewritten
-    * DELETE) commit through: the files the operation's scan read are
-    * dropped, its staged outputs appended, everything else carried by
-    * reference with its metadata lines. Same optimistic loop and the
-    * DML conflict rules: a rival removing a replaced input aborts
-    * (rather than resurrecting dropped rows), a rival DV landing on a
-    * replaced input aborts (the replacement was computed from the
-    * PINNED read — publishing would resurrect the rival's deletes);
-    * rival appends ride along untouched (write-serializable). A
-    * replacement that empties the table publishes `staged` as-is —
+  /** Publish a GROUP REPLACEMENT as the next snapshot — the second
+    * publish primitive, which every rewriting writer commits through:
+    * DML ([[deleteRangeDv]], [[mergeByKeyDv]], [[applyDeltaCommit]],
+    * the SQL MERGE INTO / UPDATE / DELETE rewrite) and OPTIMIZE
+    * ([[compact]], [[compactPartition]], [[compactClustered]]).
+    * `replaced` files are dropped, `staged` outputs appended,
+    * `dvUpdates` (full replacement vectors of carried files) land on
+    * their `#dv=` lines, and everything else is carried by reference
+    * with its metadata.
+    *
+    * Conflict rules, re-checked against the latest snapshot on every
+    * attempt: every input (`replaced` plus the `dvUpdates` files) must
+    * still be live — a rival rewrite that removed one aborts rather
+    * than double-applying DML or resurrecting dropped rows — and must
+    * carry exactly the `expectDvs` its writer planned against — a
+    * rival DV landing on one aborts (the replacement was computed
+    * from the PINNED read; publishing would resurrect the rival's
+    * deletes). Rival appends ride along untouched
+    * (write-serializable). An aborted publish deletes the writer's
+    * staged directories, so conflicts leave no orphans for [[vacuum]].
+    * A replacement that empties the table publishes `staged` as-is —
     * the caller stages an explicit empty file to keep the snapshot
-    * readable. */
+    * readable. Returns (version, files in the new snapshot). */
   private[sources] def publishReplace(table: String,
-      replaced: Seq[String], staged: Seq[String],
-      stats: Map[String, Seq[(String, Long, Long)]],
-      sstats: Map[String, Seq[(String, String, String)]],
-      rows: Map[String, Long],
-      expectDvs: Map[String, Seq[Long]],
-      pvals: Pvals = noPvals,
-      ndvs: Ndvs = noNdvs): Long = {
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
+      replaced: Seq[String], staged: Seq[String], meta: Meta,
+      expectDvs: Dvs, dvUpdates: Dvs = noDvs): (Long, Int) = {
     val replacedSet = replaced.toSet
-    publishLoop(table, nonce, "publishReplace") { snapshot =>
-      require(snapshot.nonEmpty,
-        s"publishReplace on $table needs an existing snapshot")
-      val cur = manifestOf(table, snapshot.last)
-      require(replacedSet.subsetOf(cur.files.toSet),
-        s"concurrent rewrite removed a row-level-operation input of " +
-          s"$table — aborting rather than double-applying DML")
-      require(replaced.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
-          expectDvs.getOrElse(f, Seq.empty)),
-        s"concurrent DV landed on a row-level-operation input of " +
-          s"$table — aborting rather than resurrecting the rival's " +
-          "deletes")
-      val carried = cur.files.filterNot(replacedSet)
-      Right(cur.metaLinesFor(carried) ++
-        metaLines(staged, stats, rows, sstats = sstats,
-          pvals = pvals, ndvs = ndvs) ++
-        carried ++ staged)
-    }
+    val inputs = replacedSet ++ dvUpdates.keySet
+    var after = 0
+    val v =
+      try publishLoop(table, "publishReplace") { snapshot =>
+        require(snapshot.nonEmpty,
+          s"publishReplace on $table needs an existing snapshot")
+        val cur = manifestOf(table, snapshot.last)
+        require(inputs.subsetOf(cur.files.toSet),
+          s"concurrent rewrite removed an input of this commit to " +
+            s"$table — aborting rather than double-applying DML or " +
+            "resurrecting dropped rows")
+        require(inputs.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
+            expectDvs.getOrElse(f, Seq.empty)),
+          s"concurrent DV landed on an input of this commit to " +
+            s"$table — aborting rather than resurrecting the rival's " +
+            "deletes")
+        val carried = cur.files.filterNot(replacedSet)
+        after = carried.size + staged.size
+        Right(snapshotLines(table, carried, cur.meta,
+          cur.dvs ++ dvUpdates, staged, meta))
+      } catch {
+        case e: IllegalArgumentException =>
+          dropStaged(table, staged)
+          throw e
+      }
+    (v, after)
   }
+
+  /** The next manifest's body: carried files with their metadata
+    * and (possibly updated) vectors, then the staged files with
+    * theirs. Checks the one invariant DV row identity rests on —
+    * basenames are unique across the whole snapshot
+    * ([[withFilePos]] keys rows by `_metadata.file_name`; the
+    * writers' [[stageFrame]] guarantees it by construction). */
+  private def snapshotLines(table: String, carried: Seq[String],
+      carriedMeta: Meta, dvs: Dvs, staged: Seq[String],
+      meta: Meta): Seq[String] = {
+    val names = (carried ++ staged).map(_.split('/').last)
+    require(names.distinct.size == names.size,
+      s"basename collision in the next snapshot of $table: " +
+        names.diff(names.distinct).distinct.mkString(", ") +
+        " — deletion vectors would mask the wrong file's rows")
+    metaLines(carried, carriedMeta, dvs) ++ metaLines(staged, meta) ++
+      carried ++ staged
+  }
+
+  /** Delete the writer-unique `data/<dir>/` staging directories
+    * holding `staged` — the abort path of [[publishReplace]]. */
+  private def dropStaged(table: String, staged: Seq[String]): Unit =
+    staged.map(_.split('/').take(2).mkString("/")).distinct
+      .foreach(d => deleteRecursively(Paths.get(table, d)))
+
+  /** The first version in `vs` that carries `tag`, if any. */
+  private def taggedIn(table: String, tag: Option[String],
+      vs: Seq[Long]): Option[Long] =
+    tag.flatMap(t => vs.find(v => tagOf(table, v).contains(t)))
 
   /** Compressed deletion-vector POSITION encoding for `#dv=` lines —
     * the roaring-bitmap idea, dependency-free (like the HLL/CMS
@@ -435,51 +484,114 @@ object ManifestTable {
     }
   }
 
-  private def metaLines(files: Seq[String], stats: Stats,
-      rows: Map[String, Long], dvs: Dvs = noDvs,
-      sstats: SStats = noSStats, pvals: Pvals = noPvals,
-      ndvs: Ndvs = noNdvs): Seq[String] =
-    files.flatMap(f => stats.getOrElse(f, Seq.empty)
+  private def metaLines(files: Seq[String], meta: Meta,
+      dvs: Dvs = noDvs): Seq[String] =
+    files.flatMap(f => meta.stats.getOrElse(f, Seq.empty)
       .map { case (c, mn, mx) => s"#stats=$f|$c|$mn|$mx" }) ++
-      files.flatMap(f => sstats.getOrElse(f, Seq.empty)
+      files.flatMap(f => meta.sstats.getOrElse(f, Seq.empty)
         .map { case (c, mn, mx) => s"#sstats=$f|$c|$mn|$mx" }) ++
-      files.flatMap(f => pvals.getOrElse(f, Seq.empty)
+      files.flatMap(f => meta.pvals.getOrElse(f, Seq.empty)
         .map { case (c, enc) => s"#pval=$f|$c|$enc" }) ++
-      files.flatMap(f => ndvs.getOrElse(f, Seq.empty)
+      files.flatMap(f => meta.ndvs.getOrElse(f, Seq.empty)
         .map { case (c, nulls, regs, hist) =>
           s"#ndv=$f|$c|$nulls|$regs|$hist" }) ++
-      files.flatMap(f => rows.get(f).map(n => s"#nrows=$f|$n")) ++
+      files.flatMap(f => meta.rows.get(f).map(n => s"#nrows=$f|$n")) ++
       files.flatMap(f => dvs.get(f).filter(_.nonEmpty)
         .map(ps => s"#dv=$f|${DvCodec.encode(ps)}"))
 
-  /** Stage `df`'s data files under a writer-unique prefix and return
-    * their sorted relative paths. Conflict-free by construction, so
-    * the data write happens exactly once no matter how many publish
-    * attempts the contention loop takes. */
-  private def stage(df: DataFrame, table: String,
-      nonce: String): Seq[String] = {
-    val stageDir = Paths.get(table, "data", s"s-$nonce")
-    df.write.mode("errorifexists").parquet(stageDir.toString)
-    Using.resource(Files.list(stageDir)) { stream =>
-      stream.iterator().asScala
+  private def newNonce(): String =
+    java.util.UUID.randomUUID().toString.take(12)
+
+  /** The ONE staging rule every Scala-side writer shares: write `df`
+    * under the fresh writer-unique directory `data/<dir>/` (so the
+    * data write happens exactly once no matter how many publish
+    * attempts the contention loop takes) and return its data files
+    * as sorted manifest-relative paths, one list per group.
+    *
+    * Basenames come out SNAPSHOT-UNIQUE by construction — the
+    * invariant DV row identity ([[withFilePos]]) rests on:
+    *  - an ungrouped write (`groups = 0`, one list back) keeps
+    *    Spark's part names, which carry the write job's UUID;
+    *  - a grouped write (`df` carries an int `__grp` column in
+    *    [0, groups)) goes out partitioned by `__grp` into a hidden
+    *    sibling dir, and each group's files are flattened into
+    *    `data/<dir>/` as `part-g<group>-<i>-<dir>.parquet`. Spark names
+    *    one task's files alike across partition dirs, so kept per
+    *    group they could share a basename. A group that wrote no file
+    *    (its inputs held no live rows) gets one explicit empty file,
+    *    so its identity and the snapshot's schema survive. */
+  private def stageFrame(df: DataFrame, table: String, dir: String,
+      groups: Int = 0): IndexedSeq[Seq[String]] = {
+    val stageDir = Paths.get(table, "data", dir)
+    if (groups == 0) {
+      df.write.mode("errorifexists").parquet(stageDir.toString)
+      return IndexedSeq(parquetNames(stageDir).map(n => s"data/$dir/$n"))
+    }
+    val tmp = Paths.get(table, "data", s".$dir-stage")
+    df.write.mode("errorifexists").partitionBy("__grp")
+      .parquet(tmp.toString)
+    Files.createDirectories(stageDir)
+    val out = (0 until groups).map { g =>
+      var pdir = tmp.resolve(s"__grp=$g")
+      if (!Files.isDirectory(pdir)) {
+        pdir = tmp.resolve(s"empty-$g")
+        df.drop("__grp").limit(0).coalesce(1)
+          .write.mode("errorifexists").parquet(pdir.toString)
+      }
+      parquetNames(pdir).zipWithIndex.map { case (n, i) =>
+        val flat = f"part-g$g%05d-$i%03d-$dir.parquet"
+        Files.move(pdir.resolve(n), stageDir.resolve(flat))
+        s"data/$dir/$flat"
+      }
+    }
+    deleteRecursively(tmp)
+    out
+  }
+
+  /** Sorted names of the parquet data files directly inside `dir`
+    * (write markers like `_SUCCESS` excluded). */
+  private def parquetNames(dir: Path): Seq[String] =
+    Using.resource(Files.list(dir)) { st =>
+      st.iterator().asScala
         .map(_.getFileName.toString)
         .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
         .toSeq.sorted
-        .map(n => s"data/s-$nonce/$n")
     }
+
+  /** [[stageFrame]] (ungrouped) plus the staged files' [[Meta]] over
+    * `statsCols`: the stats aggregation rides the write job itself
+    * through `Dataset.observe` — when exactly one file landed, the
+    * observed whole-write aggregates ARE that file's metadata (same
+    * rows, same aggregates, byte-identical manifest lines); a
+    * multi-file stage falls back to one [[fileMeta]] pass over the
+    * just-written files. With no stats columns only the exact row
+    * counts are recorded. */
+  private def stageObserved(df: DataFrame, table: String, dir: String,
+      statsCols: Seq[String]): (Seq[String], Meta) = {
+    ensureHllFunction(df.sparkSession)
+    val (kinds, aggs) = statAggCols(df.schema, statsCols)
+    val obs = new org.apache.spark.sql.Observation()
+    val staged =
+      stageFrame(df.observe(obs, aggs.head, aggs.tail: _*), table, dir)
+        .head
+    val meta =
+      if (staged.size == 1) decodeMeta(staged.head, kinds, obs.get(_))
+      else fileMeta(df.sparkSession, table, staged, statsCols)
+    (staged, meta)
   }
 
-  /** The optimistic put-if-absent publish loop every committer
-    * shares: per attempt, ONE versions() snapshot feeds `mkLines`,
-    * which either short-circuits (Left: e.g. an idempotence tag is
-    * already published — return that version) or yields the next
-    * manifest's lines (Right); the hard-link publish then either
-    * wins version last+1 or the loop re-derives against the new
-    * latest. Hard-link into place is atomic AND put-if-absent —
-    * a rename would silently replace a concurrent winner. */
-  private def publishLoop(table: String, nonce: String, what: String)
+  /** The optimistic put-if-absent publish loop behind the two publish
+    * primitives (its only callers): per attempt, ONE versions()
+    * snapshot feeds `mkLines`, which either short-circuits (Left: an
+    * idempotence tag is already published — return that version) or
+    * yields the next manifest's lines (Right); the hard-link publish
+    * then either wins version last+1 or the loop re-derives against
+    * the new latest. Hard-link into place is atomic AND put-if-absent
+    * — a rename would silently replace a concurrent winner. */
+  private def publishLoop(table: String, what: String)
       (mkLines: Seq[Long] => Either[Long, Seq[String]]): Long = {
     Files.createDirectories(manifestDir(table))
+    val nonce = newNonce()
     var attempt = 0
     while (true) {
       attempt += 1
@@ -601,37 +713,11 @@ object ManifestTable {
     * ledger to drift. */
   def commitTagged(df: DataFrame, table: String, append: Boolean,
       tag: Option[String]): Long = {
-    // tag check + version derivation share ONE versions() snapshot
-    // per attempt (below). With separate reads there is a TOCTOU: a
-    // rival publishes tag T at vN between our tag check and our
-    // prev read, we then see vN as prev and link v(N+1) with the
-    // same tag — double-append. With one snapshot, publishing
-    // v(N+1) REQUIRES having observed vN, and the tag check ran
-    // over that same list; a rival landing after the snapshot makes
-    // our createLink lose, and the retry's fresh snapshot sees its
-    // tag.
-    def taggedIn(vs: Seq[Long]): Option[Long] =
-      tag.flatMap(t => vs.find(v => tagOf(table, v).contains(t)))
-    val pre = taggedIn(versions(table))
-    if (pre.isDefined) return pre.get
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
-    val fresh = stage(df, table, nonce)
-    publishLoop(table, nonce, "commit") { snapshot =>
-      // a competing commit may have published our tag while we staged
-      taggedIn(snapshot) match {
-        case Some(v) => Left(v)
-        case None =>
-          val prev =
-            if (append)
-              snapshot.lastOption.map(manifestOf(table, _))
-                .getOrElse(emptyManifest)
-            else emptyManifest
-          // carried files keep their #stats=/#nrows= lines (file
-          // metadata survives unrelated appends)
-          Right(tag.map(t => s"#tag=$t").toSeq ++
-            prev.metaLinesFor(prev.files) ++ prev.files ++ fresh)
-      }
-    }
+    // a replay skips the staging write; a rival publishing our tag
+    // while we stage is caught by publishStaged's own tag check
+    taggedIn(table, tag, versions(table)).getOrElse(
+      publishStaged(table, stageFrame(df, table, s"s-${newNonce()}").head,
+        Meta(), append, tag))
   }
 
   /** Exactly-once streaming sink into the manifest table: each
@@ -751,40 +837,10 @@ object ManifestTable {
     require(statsCols.nonEmpty, "need at least one stats column")
     statsCols.foreach(c => require(!c.contains("|"),
       s"stats column name cannot contain '|': $c"))
-    def taggedIn(vs: Seq[Long]): Option[Long] =
-      tag.flatMap(t => vs.find(v => tagOf(table, v).contains(t)))
-    val pre = taggedIn(versions(table))
-    if (pre.isDefined) return pre.get
-    val spark = df.sparkSession
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
-    // the stats aggregation rides the staging write job itself; the
-    // single-file commit (the dominant shape) skips the separate
-    // just-written-data scan, a multi-file stage falls back to it
-    val (wrapped, fetchMeta) = observeStats(df, statsCols)
-    val fresh = stage(wrapped, table, nonce)
-    val (freshStats, freshSStats, freshRows, freshNdvs) =
-      fetchMeta(fresh).getOrElse(
-        fileMeta(spark, Paths.get(table, "data", s"s-$nonce").toString,
-          s"data/s-$nonce", statsCols, fresh))
-    publishLoop(table, nonce, "commitWithStats") { snapshot =>
-      taggedIn(snapshot) match {
-        case Some(v) => Left(v)
-        case None =>
-          val prev =
-            if (append)
-              snapshot.lastOption.map(manifestOf(table, _))
-                .getOrElse(emptyManifest)
-            else emptyManifest
-          // carried files keep their dv/sstats lines too — dropping
-          // a #dv= line here would RESURRECT merge-on-read deletes
-          Right(tag.map(t => s"#tag=$t").toSeq ++
-            metaLines(prev.files ++ fresh,
-              prev.stats ++ freshStats, prev.rows ++ freshRows,
-              prev.dvs, prev.sstats ++ freshSStats,
-              pvals = prev.pvals,
-              ndvs = prev.ndvs ++ freshNdvs) ++
-            prev.files ++ fresh)
-      }
+    taggedIn(table, tag, versions(table)).getOrElse {
+      val (fresh, meta) =
+        stageObserved(df, table, s"s-${newNonce()}", statsCols)
+      publishStaged(table, fresh, meta, append, tag)
     }
   }
 
@@ -835,19 +891,9 @@ object ManifestTable {
         graft.expressions.LogHistAgg(children(0)))
   }
 
-  /** The per-file metadata pass shared by every stats-recording
-    * writer ([[commitWithStats]], [[deleteRange]]'s rewrite): ONE
-    * distributed aggregation over the just-written files computing
-    * min/max per stats column, the [[NdvSketch]] HLL registers, plus
-    * the exact row count, keyed by `_metadata.file_path`. Costs one
-    * scan of data that is already hot (just written); the row counts
-    * make [[countRows]] metadata-only. Integer/date/timestamp
-    * columns land in the int64 stats, strings in the hex byte-wise
-    * string stats; every stats column gets an `#ndv=` register
-    * sketch over its canonical encoding. */
   /** The (kinds, aggregate columns) of the stats pass over
     * `statsCols` — shared by the grouped per-file pass ([[fileMeta]])
-    * and the in-write observed pass ([[observeStats]]). Layout:
+    * and the in-write observed pass ([[stageObserved]]). Layout:
     * leading `__n` row count, then per column i the fields
     * `__mn_i`, `__mx_i`, `__ndv_i`, `__nn_i`, `__h_i`. */
   private def statAggCols(
@@ -881,15 +927,16 @@ object ManifestTable {
   }
 
   /** Decode one stats-aggregation result — a per-file group row or
-    * the observed whole-write row — into (int zones, string zones,
-    * row count, ndv entries), [[fileMeta]]'s per-file tuple sans the
-    * path. `field` resolves an aggregate alias to its value (boxed
-    * Long/String/Seq, null for an empty min/max). */
-  private def decodeStatFields(kinds: Seq[(String, Char)],
-      field: String => Any)
-      : (Seq[(String, Long, Long)], Seq[(String, String, String)],
-        Long, Seq[(String, Long, String, String)]) = {
+    * the observed whole-write row — into file `f`'s [[Meta]]: int
+    * zones, string zones, the exact row count and the NDV entries.
+    * `field` resolves an aggregate alias to its value (boxed
+    * Long/String/Seq, null for an empty min/max). A zero-row file
+    * records only its exact 0 count. */
+  private def decodeMeta(f: String, kinds: Seq[(String, Char)],
+      field: String => Any): Meta = {
     def longOf(v: Any): Long = v.asInstanceOf[Number].longValue
+    val n = longOf(field("__n"))
+    if (n == 0L) return Meta(rows = Map(f -> 0L))
     val longs = kinds.zipWithIndex.flatMap { case ((c, k), i) =>
       val (mn, mx) = (field(s"__mn_$i"), field(s"__mx_$i"))
       if (k == 'S' || mn == null || mx == null) None
@@ -913,94 +960,60 @@ object ManifestTable {
         StrStat.hex(arr.map(v =>
           v.asInstanceOf[Number].byteValue).toArray), hist)
     }
-    (longs, strs, longOf(field("__n")), regs)
+    Meta(stats = if (longs.nonEmpty) Map(f -> longs) else noStats,
+      sstats = if (strs.nonEmpty) Map(f -> strs) else noSStats,
+      rows = Map(f -> n),
+      ndvs = if (regs.nonEmpty) Map(f -> regs) else noNdvs)
   }
 
-  /** Fold the stats pass INTO the write job (guide §2.4 — remove the
-    * redundant pass over just-written data): wraps `df` with an
-    * observed [[statAggCols]] aggregation, and after the write the
-    * returned fetch yields the per-file metadata WHEN exactly one
-    * data file landed — the observed whole-write aggregates ARE that
-    * file's stats (same rows, same aggregates, byte-identical
-    * manifest lines). A multi-file stage returns None and the caller
-    * falls back to the per-file [[fileMeta]] scan — correct, one
-    * extra job, exactly the pre-observation cost. A zero-row single
-    * file mirrors fileMeta's no-group shape: count 0, no stats/ndv
-    * lines. */
-  private def observeStats(df: DataFrame, statsCols: Seq[String])
-      : (DataFrame, Seq[String] =>
-        Option[(Stats, SStats, Map[String, Long], Ndvs)]) = {
-    ensureHllFunction(df.sparkSession)
-    val (kinds, aggs) = statAggCols(df.schema, statsCols)
-    val obs = new org.apache.spark.sql.Observation()
-    val wrapped = df.observe(obs, aggs.head, aggs.tail: _*)
-    val fetch = (staged: Seq[String]) =>
-      if (staged.size != 1) None
-      else {
-        val m = obs.get
-        val (longs, strs, n, regs) = decodeStatFields(kinds, m(_))
-        val f = staged.head
-        if (n == 0L)
-          // fileMeta's zero-row shape: the expect backfill records
-          // the exact 0 count, no stats/sstats/ndv lines
-          Some((noStats, noSStats, Map(f -> 0L), noNdvs))
-        else Some((
-          if (longs.nonEmpty) Map(f -> longs) else noStats,
-          if (strs.nonEmpty) Map(f -> strs) else noSStats,
-          Map(f -> n),
-          if (regs.nonEmpty) Map(f -> regs.toSeq) else noNdvs))
-      }
-    (wrapped, fetch)
-  }
-
-  private def fileMeta(spark: SparkSession, dir: String,
-      prefix: String, statsCols: Seq[String],
-      expect: Seq[String] = Seq.empty)
-      : (Stats, SStats, Map[String, Long], Ndvs) = {
+  /** The per-file metadata pass over just-written `files` (table-
+    * relative): ONE distributed aggregation computing min/max per
+    * stats column, the [[NdvSketch]] HLL registers and the exact row
+    * count, keyed by `_metadata.file_name` — basenames are unique by
+    * [[stageFrame]]'s construction. Costs one scan of data that is
+    * already hot; the row counts make [[countRows]] metadata-only.
+    * Integer/date/timestamp columns land in the int64 stats, strings
+    * in the hex byte-wise string stats; every stats column gets an
+    * `#ndv=` register sketch over its canonical encoding. */
+  private def fileMeta(spark: SparkSession, table: String,
+      files: Seq[String], statsCols: Seq[String]): Meta = {
     import org.apache.spark.sql.functions.col
     ensureHllFunction(spark)
-    val df = spark.read.parquet(dir)
+    val root = Paths.get(table)
+    val df = spark.read.parquet(files.map(f =>
+      root.resolve(f).toString): _*)
     val (kinds, aggs) = statAggCols(df.schema, statsCols)
-    // group by the FULL path, not the basename: a partitioned staging
-    // write can give files in different group dirs the same part
-    // basename, and a basename key would silently merge their stats
-    val rows = df
-      .groupBy(col("_metadata.file_path").as("__f"))
+    val relOf = files.map(f => f.split('/').last -> f).toMap
+    // a zero-row part file produces no aggregation group but its
+    // count IS exactly 0 — the seed keeps countRows exact-or-None
+    df.groupBy(col("_metadata.file_name").as("__f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
-    // perFile re-keys on basename below; two files with identical
-    // basenames in different subdirs would silently last-win each
-    // other's stats maps — fail loudly instead (current writers
-    // stage flat, UUID-named files, so this is an invariant check)
-    require(rows.map(_.getString(0).split('/').last).distinct.length
-        == rows.length,
-      s"fileMeta: basename collision across $dir — per-file stats " +
-        "would be corrupted")
-    val perFile = rows.map { r =>
-      val name = r.getString(0).split('/').last
-      val (longs, strs, n, regs) =
-        decodeStatFields(kinds, nm => r.get(r.fieldIndex(nm)))
-      (s"$prefix/$name", longs, strs, n, regs)
-    }
-    val stats: Stats = perFile
-      .collect { case (f, ls, _, _, _) if ls.nonEmpty => f -> ls }.toMap
-    val sstats: SStats = perFile
-      .collect { case (f, _, ss, _, _) if ss.nonEmpty => f -> ss }.toMap
-    val ndvs: Ndvs = perFile
-      .map { case (f, _, _, _, regs) => f -> regs.toSeq }.toMap
-    val counts = perFile.map { case (f, _, _, n, _) => f -> n }.toMap
-    // a zero-row part file produces no aggregation group but its
-    // count IS exactly 0 — backfill so countRows stays exact-or-None
-    (stats, sstats, counts ++
-      expect.filterNot(counts.contains).map(_ -> 0L).toMap, ndvs)
+      .map(r => decodeMeta(relOf(r.getString(0)), kinds,
+        nm => r.get(r.fieldIndex(nm))))
+      .foldLeft(Meta(rows = files.map(_ -> 0L).toMap))(_ ++ _)
+  }
+
+  /** The columns every input that can hold rows carries zone stats
+    * for (integer or string) — what a rewrite of `files` re-records so
+    * it doesn't erode the snapshot's prunability. KNOWN-empty inputs
+    * (`#nrows=0`) contribute no rows, so their (absent) stats must not
+    * erase the output's. */
+  private def commonStatCols(m: Manifest, files: Seq[String])
+      : Seq[String] = {
+    val counted = files.filterNot(f => m.rows.get(f).contains(0L))
+    if (counted.isEmpty) Seq.empty
+    else counted.map(f => (m.stats.getOrElse(f, Seq.empty).map(_._1) ++
+        m.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
+      .reduce(_ intersect _).toSeq.sorted
   }
 
   /** Append the per-file identity columns every DV operation keys on:
-    * `__b` (file basename — staged part names carry task UUIDs, so
-    * basenames are snapshot-unique) and `__p` (the physical row
-    * position `_metadata.row_index`). Must be projected directly on
-    * the file-source relation (the hidden `_metadata` column does not
-    * survive joins). */
+    * `__b` (file basename — snapshot-unique because every writer
+    * stages through [[stageFrame]], and re-checked at each publish)
+    * and `__p` (the physical row position `_metadata.row_index`).
+    * Must be projected directly on the file-source relation (the
+    * hidden `_metadata` column does not survive joins). */
   private def withFilePos(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
     // _metadata.file_name IS the basename — the constant metadata
@@ -1106,7 +1119,7 @@ object ManifestTable {
     require(vs.contains(v),
       s"version $v of $table does not exist (live: " +
         s"${vs.mkString(", ")})")
-    val Manifest(files, stats, nrows, dvs, sstats, _, _) =
+    val Manifest(files, Meta(stats, sstats, nrows, _, _), dvs) =
       manifestOf(table, v)
     require(files.nonEmpty,
       s"snapshot v$v of $table lists no data files — a pruned read " +
@@ -1434,92 +1447,23 @@ object ManifestTable {
             .distinct.sorted
         }.toMap
       }
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
-    val stageDir = Paths.get(table, "data", s"d-$nonce")
-    // columns every rewritten input carried stats for (integer OR
-    // string zones) — recompute so the rewrite doesn't erode the
-    // snapshot's prunability; computed BEFORE the write so the stats
-    // aggregation can ride the rewrite job itself
-    val keepCols =
-      if (cowFiles.isEmpty) Seq.empty[String]
-      else cowFiles.map(f =>
-          (m.stats.getOrElse(f, Seq.empty).map(_._1) ++
-            m.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
-        .reduce(_ intersect _).toSeq.sorted
-    var stagedMetaObs
-        : Option[(Stats, SStats, Map[String, Long], Ndvs)] = None
-    var staged =
-      if (cowFiles.isEmpty) Seq.empty[String]
+    // the rewrite re-records every column all rewritten inputs carried
+    // stats for; the aggregation rides the rewrite job itself. Spark's
+    // unpartitioned write always stages at least one (possibly empty)
+    // file, so a delete of every row still leaves a readable snapshot.
+    // NOT(match) keeps NULL rows by construction: match is isNotNull &&
+    // between, so its negation is true on NULL — a range predicate is
+    // UNKNOWN on NULL, per SQL DELETE
+    val (staged, meta) =
+      if (cowFiles.isEmpty) (Seq.empty[String], Meta())
       else {
-        // NOT(match) keeps NULL rows by construction: match is
-        // isNotNull && between, so its negation is true on NULL —
-        // a range predicate is UNKNOWN on NULL, per SQL DELETE
         val cowSrc = liveOf(cowFiles)
-        val (wrapped, fetchMeta) = observeStats(
+        stageObserved(
           cowSrc.filter(not(matchPredOf(cowSrc))).drop("__b", "__p"),
-          keepCols)
-        wrapped.write.mode("errorifexists").parquet(stageDir.toString)
-        val listed = Using.resource(Files.list(stageDir)) { st =>
-          st.iterator().asScala
-            .map(_.getFileName.toString)
-            .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-            .toSeq.sorted
-            .map(n => s"data/d-$nonce/$n")
-        }
-        stagedMetaObs = fetchMeta(listed)
-        listed
+          table, s"d-${newNonce()}", commonStatCols(m, cowFiles))
       }
-    val (newStats, newSStats, newRows, newNdvs) =
-      if (staged.isEmpty)
-        (noStats, noSStats, Map.empty[String, Long], noNdvs)
-      else stagedMetaObs.getOrElse(
-        fileMeta(spark, stageDir.toString, s"data/d-$nonce",
-          keepCols, staged))
-    val cowSet = cowFiles.toSet
-    val inputSet = cowSet ++ dvFiles
-    var after = 0
-    val v = publishLoop(table, nonce, "deleteRange") { snapshot =>
-      val cur = manifestOf(table, snapshot.last)
-      require(inputSet.subsetOf(cur.files.toSet),
-        s"concurrent rewrite removed a delete input of $table — " +
-          "aborting rather than double-applying DML")
-      require(inputSet.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
-          m.dvs.getOrElse(f, Seq.empty)),
-        s"concurrent DV landed on a delete input of $table — " +
-          "aborting rather than resurrecting the rival's deletes")
-      val carried = cur.files.filterNot(cowSet)
-      if (carried.isEmpty && staged.isEmpty) {
-        // everything deleted: keep the snapshot readable (schema
-        // survives) with one explicit empty file
-        val emptyDir = Paths.get(table, "data", s"d-$nonce-empty")
-        if (!Files.isDirectory(emptyDir))
-          spark.read.schema(tableSchema)
-            .parquet(cowFiles.map(f => root.resolve(f).toString): _*)
-            .limit(0).coalesce(1)
-            .write.mode("errorifexists").parquet(emptyDir.toString)
-        staged = Using.resource(Files.list(emptyDir)) { st =>
-          st.iterator().asScala
-            .map(_.getFileName.toString)
-            .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-            .toSeq.sorted
-            .map(n => s"data/d-$nonce-empty/$n")
-        }
-      }
-      after = carried.size + staged.size
-      // the delete-all placeholder is staged AFTER fileMeta ran, so
-      // backfill its #nrows line here — its count is exactly 0 by
-      // construction (same zero-row backfill fileMeta applies), which
-      // keeps countRows/statsBounds exact instead of degrading to
-      // None after a full purge
-      val rowsAll = newRows ++
-        staged.filterNot(newRows.contains).map(_ -> 0L)
-      Right(metaLines(carried, cur.stats, cur.rows,
-          cur.dvs ++ dvUpdates, cur.sstats, pvals = cur.pvals,
-          ndvs = cur.ndvs) ++
-        metaLines(staged, newStats, rowsAll, sstats = newSStats,
-          ndvs = newNdvs) ++
-        carried ++ staged)
-    }
+    val (v, after) =
+      publishReplace(table, cowFiles, staged, meta, m.dvs, dvUpdates)
     (v, cowFiles.size, dvFiles.size, after)
   }
 
@@ -1654,7 +1598,7 @@ object ManifestTable {
     val candidates = m.files.filter(f =>
       hitFiles.contains(f) || zoneless.contains(f))
     val root = Paths.get(table)
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
+    val nonce = newNonce()
     // align the batch to the table schema (by name, loud on drift) —
     // the snapshot's merged schema is cached per version and passed
     // explicitly to every scan below, so the footer-union job runs
@@ -1729,29 +1673,14 @@ object ManifestTable {
             }.toMap
         (dvF, split.collect { case (f, false) => f }, dvUp)
       }
-    def listStaged(dir: Path, prefix: String): Seq[String] =
-      Using.resource(Files.list(dir)) { st =>
-        st.iterator().asScala
-          .map(_.getFileName.toString)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-          .toSeq.sorted
-          .map(n => s"$prefix/$n")
-      }
     // re-record metadata over the columns all rewritten inputs
     // carried — integer or string zones (fresh tables / no rewrite:
     // just the key column). Computed BEFORE the staged writes so the
     // stats aggregation can ride the write jobs themselves.
     val keepCols =
-      if (cowFiles.isEmpty) Seq(keyCol)
-      else cowFiles.map(f =>
-          (m.stats.getOrElse(f, Seq.empty).map(_._1) ++
-            m.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
-        .reduce(_ intersect _).toSeq.sorted
-    val noMeta = (noStats, noSStats, Map.empty[String, Long], noNdvs)
-    val (rewrittenStaged, inserts, rwMetaObs) =
-      if (cowFiles.isEmpty)
-        (Seq.empty[String], up,
-          None: Option[(Stats, SStats, Map[String, Long], Ndvs)])
+      if (cowFiles.isEmpty) Seq(keyCol) else commonStatCols(m, cowFiles)
+    val (rwStaged, rwMeta, inserts) =
+      if (cowFiles.isEmpty) (Seq.empty[String], Meta(), up)
       else {
         val base = liveOf(cowFiles)
           .select(tableCols.map(col): _*)
@@ -1762,78 +1691,33 @@ object ManifestTable {
         val replaced = base
           .join(up.select(col(keyCol)), Seq(keyCol), "left_anti")
           .unionByName(up.join(baseKeys, Seq(keyCol), "left_semi"))
-        val stageDir = Paths.get(table, "data", s"m-$nonce")
-        // the rewrite's stats pass rides the write job (single-output
-        // rewrites — the common shape — skip the separate scan)
-        val (wrappedRw, fetchRw) =
-          if (keepCols.isEmpty) (replaced, null)
-          else observeStats(replaced, keepCols)
         // keep the file count at the rewritten-file count: the rewrite
         // replaces N files with N, not with one-per-shuffle-partition
-        wrappedRw.coalesce(cowFiles.size)
-          .write.mode("errorifexists").parquet(stageDir.toString)
-        val staged = listStaged(stageDir, s"data/m-$nonce")
+        val (staged, meta) = stageObserved(
+          replaced.coalesce(cowFiles.size), table, s"m-$nonce", keepCols)
         // inserts: update keys matching NO rewritten file (untouched
         // files provably hold none of the batch's keys — the zone or
         // match-scan proof; DV'd rows are dead, so their keys' new
         // rows insert)
-        (staged, up.join(baseKeys, Seq(keyCol), "left_anti"),
-          if (keepCols.isEmpty) None else fetchRw(staged))
+        (staged, meta, up.join(baseKeys, Seq(keyCol), "left_anti"))
       }
     // the batch's new keys land as ONE append file (batch-sized),
-    // with the count (and stats) OBSERVED in the write job — the
-    // previous isEmpty pre-probe job folds into the write: a batch
+    // with the count (and stats) OBSERVED in the write job — a batch
     // with no inserts deletes the staged junk file after the fact
     // instead of having probed first, so an empty file never lands
     // in the snapshot (it would poison the exact-or-None row count)
-    val insertDir = Paths.get(table, "data", s"m-$nonce-ins")
-    val (wrappedIns, fetchIns) = observeStats(inserts, keepCols)
-    wrappedIns.coalesce(1)
-      .write.mode("errorifexists").parquet(insertDir.toString)
-    val insListed = listStaged(insertDir, s"data/m-$nonce-ins")
-    val insMetaObs = fetchIns(insListed)
-    val insEmpty = insListed.isEmpty ||
-      insMetaObs.exists(_._3.values.sum == 0L)
-    if (insEmpty && insListed.nonEmpty) deleteRecursively(insertDir)
-    val insertStaged = if (insEmpty) Seq.empty[String] else insListed
+    val (insListed, insMeta) = stageObserved(inserts.coalesce(1), table,
+      s"m-$nonce-ins", keepCols)
+    val insEmpty = insMeta.rows.values.sum == 0L
+    if (insEmpty) deleteRecursively(Paths.get(table, "data",
+      s"m-$nonce-ins"))
     // both writes consumed the base checkpoints (and the batch's own
     // checkpoint) — release them now instead of pinning per-MERGE
     // copies for the session's life
     (up0 +: toFree).foreach(Lineage.freeLocalCheckpoint)
-    def metaOf(dir: Path, prefix: String, paths: Seq[String],
-        observed: Option[(Stats, SStats, Map[String, Long], Ndvs)])
-        : (Stats, SStats, Map[String, Long], Ndvs) =
-      if (paths.isEmpty || keepCols.isEmpty) noMeta
-      else observed.getOrElse(
-        fileMeta(spark, dir.toString, prefix, keepCols, paths))
-    val (rwStats, rwSStats, rwRows, rwNdvs) = metaOf(
-      Paths.get(table, "data", s"m-$nonce"), s"data/m-$nonce",
-      rewrittenStaged, rwMetaObs)
-    val (insStats, insSStats, insRows, insNdvs) = metaOf(insertDir,
-      s"data/m-$nonce-ins", insertStaged, insMetaObs)
-    val cowSet = cowFiles.toSet
-    val inputSet = cowSet ++ dvFiles
-    var after = 0
-    val v = publishLoop(table, nonce, "mergeByKey") { snapshot =>
-      val cur = manifestOf(table, snapshot.last)
-      require(inputSet.subsetOf(cur.files.toSet),
-        s"concurrent rewrite removed a merge input of $table — " +
-          "aborting rather than double-applying DML")
-      require(inputSet.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
-          m.dvs.getOrElse(f, Seq.empty)),
-        s"concurrent DV landed on a merge input of $table — " +
-          "aborting rather than resurrecting the rival's deletes")
-      val carried = cur.files.filterNot(cowSet)
-      val staged = rewrittenStaged ++ insertStaged
-      after = carried.size + staged.size
-      Right(metaLines(carried, cur.stats, cur.rows,
-          cur.dvs ++ dvUpdates, cur.sstats, pvals = cur.pvals,
-          ndvs = cur.ndvs) ++
-        metaLines(staged, rwStats ++ insStats, rwRows ++ insRows,
-          sstats = rwSStats ++ insSStats,
-          ndvs = rwNdvs ++ insNdvs) ++
-        carried ++ staged)
-    }
+    val (v, after) = publishReplace(table, cowFiles,
+      rwStaged ++ (if (insEmpty) Seq.empty else insListed),
+      rwMeta ++ (if (insEmpty) Meta() else insMeta), m.dvs, dvUpdates)
     (v, cowFiles.size, dvFiles.size, after)
     } catch {
       case t: Throwable =>
@@ -1891,101 +1775,30 @@ object ManifestTable {
       !(overCap || overFrac)
     }
     val root = Paths.get(table)
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
-    // CoW fallback: rewrite each over-budget file live-minus-DV —
-    // ONE staged file per input (a file-local rewrite keeps the
-    // partition tuple and zone columns of its input)
-    val (rwStaged, rwStats, rwSStats, rwRows, rwNdvs, rwPvals) =
-      if (rewrite.isEmpty)
-        (Seq.empty[String], noStats, noSStats,
-          Map.empty[String, Long], noNdvs, noPvals)
-      else {
-        val outs = rewrite.keys.toSeq.sorted.zipWithIndex.map {
-          case (f, i) =>
-            val dir = Paths.get(table, "data", s"dx-$nonce-$i")
-            val cols = (m.stats.getOrElse(f, Seq.empty).map(_._1) ++
-              m.sstats.getOrElse(f, Seq.empty).map(_._1)).distinct
-            // the file's stats pass (or, stat-less, just its exact
-            // #nrows count) rides the rewrite job itself — the
-            // separate fileMeta/count scan per rewritten file is gone
-            val (wrapped, fetchMeta) = observeStats(
-              readLive(spark, root, Seq(f), Map(f -> rewrite(f))),
-              cols)
-            wrapped.coalesce(1)
-              .write.mode("errorifexists").parquet(dir.toString)
-            val staged = Using.resource(Files.list(dir)) { st =>
-              st.iterator().asScala.map(_.getFileName.toString)
-                .filter(n => n.endsWith(".parquet") &&
-                  !n.startsWith("_"))
-                .toSeq.sorted.map(n => s"data/dx-$nonce-$i/$n")
-            }
-            require(staged.size == 1,
-              s"single-file rewrite staged ${staged.size} files")
-            (f, staged.head, dir, cols,
-              fetchMeta(staged).getOrElse(
-                fileMeta(spark, dir.toString,
-                  staged.head.split('/').dropRight(1).mkString("/"),
-                  cols, staged)))
-        }
-        var st: Stats = noStats
-        var sst: SStats = noSStats
-        var rw = Map.empty[String, Long]
-        var nd: Ndvs = noNdvs
-        outs.foreach { case (_, out, _, cols, (a, b, c, e)) =>
-          if (cols.isEmpty) {
-            // stat-less input: record only the exact #nrows count
-            // (the observed pass carries it; stats maps stay absent)
-            rw = rw ++ c
-          } else {
-            st = st ++ a; sst = sst ++ b; rw = rw ++ c; nd = nd ++ e
-          }
-        }
-        (outs.map(_._2), st, sst, rw, nd,
-          outs.flatMap { case (f, out, _, _, _) =>
-            m.pvals.get(f).filter(_.nonEmpty).map(out -> _)
-          }.toMap)
-      }
-    val touched = merged.keySet
-    val rewriteSet = rewrite.keySet
-    // on a conflict abort (require-failure below) the CoW-fallback
-    // rewrites staged under data/dx-<nonce>-* are unreferenced by any
-    // manifest — reclaim them eagerly rather than leave orphans for
-    // vacuum (the delta write's own s-<nonce> staging is dropped by
-    // ManifestDeltaBatchWrite.abort; these dirs are staged HERE, so
-    // they are cleaned HERE)
-    val v = try {
-      publishLoop(table, nonce, "applyDeltaCommit") { snapshot =>
-        val cur = manifestOf(table, snapshot.last)
-        require(touched.subsetOf(cur.files.toSet),
-          s"concurrent rewrite removed a delta-operation input of " +
-            s"$table — aborting rather than double-applying DML")
-        require(touched.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
-            expectDvs.getOrElse(f, Seq.empty)),
-          s"concurrent DV landed on a delta-operation input of $table " +
-            "— aborting rather than conflating two serializations")
-        val carried = cur.files.filterNot(rewriteSet)
-        val allStaged = staged ++ rwStaged
-        Right(metaLines(carried, cur.stats, cur.rows,
-            cur.dvs ++ dvKeep, cur.sstats, pvals = cur.pvals,
-            ndvs = cur.ndvs) ++
-          metaLines(allStaged, stats ++ rwStats, rows ++ rwRows,
-            sstats = sstats ++ rwSStats, pvals = pvals ++ rwPvals,
-            ndvs = ndvs ++ rwNdvs) ++
-          carried ++ allStaged)
-      }
-    } catch {
-      case e: Throwable =>
-        rewrite.keys.toSeq.indices.foreach { i =>
-          val dir = Paths.get(table, "data", s"dx-$nonce-$i")
-          if (Files.isDirectory(dir)) {
-            Using.resource(Files.list(dir)) { st =>
-              st.iterator().asScala.toSeq.foreach(Files.deleteIfExists)
-            }
-            Files.deleteIfExists(dir)
-          }
-        }
-        throw e
+    val nonce = newNonce()
+    // CoW fallback: rewrite each over-budget file live-minus-DV — ONE
+    // staged file per input (a file-local rewrite keeps the partition
+    // tuple and zone columns of its input); the file's stats pass (or,
+    // stat-less, just its exact #nrows count) rides the rewrite job
+    val rewritten = rewrite.keys.toSeq.sorted.zipWithIndex.map {
+      case (f, i) =>
+        val cols = (m.stats.getOrElse(f, Seq.empty).map(_._1) ++
+          m.sstats.getOrElse(f, Seq.empty).map(_._1)).distinct
+        val (out, meta) = stageObserved(
+          readLive(spark, root, Seq(f), Map(f -> rewrite(f)))
+            .coalesce(1), table, s"dx-$nonce-$i", cols)
+        require(out.size == 1,
+          s"single-file rewrite staged ${out.size} files")
+        (out.head, meta ++ Meta(pvals =
+          m.pvals.get(f).filter(_.nonEmpty).map(out.head -> _).toMap))
     }
+    // a conflict abort inside publishReplace drops the CoW rewrites'
+    // dx-<nonce>-* dirs together with the delta write's own staging
+    val (v, _) = publishReplace(table, rewrite.keys.toSeq,
+      staged ++ rewritten.map(_._1),
+      rewritten.map(_._2).foldLeft(Meta(stats, sstats, rows, ndvs,
+        pvals))(_ ++ _),
+      expectDvs, dvKeep)
     (v, dvKeep.size, rewrite.size)
   }
 
@@ -2058,12 +1871,11 @@ object ManifestTable {
     val (single, multi) = grouped.partition(g =>
       g.size == 1 && !g.exists(hasDv))
     if (multi.isEmpty) return (latest, files.size, files.size)
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
     // ONE job rewrites every group: tag each input row with its
-    // group via a broadcast basename→group join (staged part-file
-    // names carry task UUIDs, so basenames are unique), cluster by
-    // group so each group lands whole in one task, and write
-    // partitioned by group — N groups never become N sequential
+    // group via a broadcast basename→group join (basenames are
+    // snapshot-unique — [[stageFrame]]'s rule, checked at every
+    // publish), cluster by group so each group lands whole in one
+    // task, and stage grouped — N groups never become N sequential
     // driver-looped jobs. The snapshot's cached merged schema keeps
     // the union-schema evolution contract (groups spanning a
     // schema-evolution boundary rewrite under it, late columns NULL)
@@ -2080,177 +1892,84 @@ object ManifestTable {
     require(!dataCols.contains("__grp") && !dataCols.contains("__base") &&
         !dataCols.contains("__b") && !dataCols.contains("__p"),
       s"compact's internal columns collide with table columns of $table")
-    val stageRoot = Paths.get(table, "data", s".c-$nonce-stage")
     // DV'd inputs rewrite through their mask (the dead rows fall out
-    // here, once, instead of at every subsequent read)
-    maskDvs(spark, withFilePos(src), m0.dvs, multi.flatten)
-      .withColumnRenamed("__b", "__base")
-      .join(broadcast(grpOf.toDF("__base", "__grp")), "__base")
-      .repartition(multi.size, col("__grp"))
-      .select((dataCols.map(col) :+ col("__grp")): _*)
-      .write.mode("errorifexists").partitionBy("__grp")
-      .parquet(stageRoot.toString)
-    // flatten the partitioned staging layout into per-group dirs; a
-    // group whose inputs were all empty wrote no partition — give it
-    // an explicit empty file so its rows-preserving identity (and the
-    // snapshot's schema) survive
-    val staged: Seq[(Int, Seq[String])] = multi.indices.map { gi =>
-      val pdir = stageRoot.resolve(s"__grp=$gi")
-      val outDir = Paths.get(table, "data", s"c-$nonce-$gi")
-      if (!Files.isDirectory(pdir)) {
-        src.limit(0).select(dataCols.map(col): _*).coalesce(1)
-          .write.mode("errorifexists").parquet(outDir.toString)
-      } else {
-        Files.createDirectories(outDir)
-        Using.resource(Files.list(pdir)) { st =>
-          st.iterator().asScala
-            .map(_.getFileName.toString)
-            .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-            .foreach(n => Files.move(pdir.resolve(n), outDir.resolve(n)))
-        }
-      }
-      gi -> Using.resource(Files.list(outDir)) { st =>
-        st.iterator().asScala
-          .map(_.getFileName.toString)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-          .toSeq.sorted
-          .map(n => s"data/c-$nonce-$gi/$n")
-      }
-    }
-    deleteRecursively(stageRoot)
-    val stagedFiles = staged.flatMap(_._2)
-    val rewritten = multi.flatten.toSet
-    // groups that paid down merge-on-read debt: the inputs' manifest
-    // arithmetic no longer bounds their output EXACTLY (the masked
-    // rows may have held the min/max), so re-derive stats + counts
-    // from the rewritten files — one scan of just-written hot data,
-    // only for DV-carrying groups; statsBounds turns exact again the
-    // moment the DVs purge
-    val dvGroupMeta
-        : Map[Int, (Stats, SStats, Map[String, Long], Ndvs)] =
-      staged.flatMap { case (gi, outs) =>
-        if (!multi(gi).exists(hasDv)) None
-        else {
-          // KNOWN-empty inputs (#nrows=0) contribute no rows, so
-          // their (absent) stats must not erase the output's — only
-          // inputs that can hold rows join the column intersection
-          val counted = multi(gi).filterNot(f =>
-            m0.rows.get(f).contains(0L))
-          val common =
-            if (counted.isEmpty) Seq.empty[String]
-            else counted.map(f =>
-                (m0.stats.getOrElse(f, Seq.empty).map(_._1) ++
-                  m0.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
-              .reduce(_ intersect _).toSeq.sorted
-          Some(gi -> fileMeta(spark,
-            Paths.get(table, "data", s"c-$nonce-$gi").toString,
-            s"data/c-$nonce-$gi", common, outs))
-        }
-      }.toMap
-    var after = 0
-    val v = publishLoop(table, nonce, "compact") { snapshot =>
-      val cur = manifestOf(table, snapshot.last)
-      require(rewritten.subsetOf(cur.files.toSet),
-        s"concurrent rewrite removed a compacted input of $table — " +
-          "aborting rather than resurrecting dropped rows")
-      require(rewritten.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
-          m0.dvs.getOrElse(f, Seq.empty)),
-        s"concurrent DV landed on a compacted input of $table — " +
-          "aborting rather than resurrecting the rival's deletes")
-      // rivals' appends since our snapshot ride along untouched;
-      // survivors keep their zone lines, and compacted outputs get
-      // MERGED lines for every column all their inputs carry — the
-      // union's min(mins)/max(maxes) bounds any output file exactly.
-      // Row counts merge the same way (the output holds exactly the
-      // sum of its inputs' rows) when every input carries one.
-      // DV-carrying groups use the recomputed meta instead.
-      val carried = cur.files.filterNot(rewritten.contains)
-      val mergedMetaLines = staged.flatMap { case (gi, outs) =>
-        dvGroupMeta.get(gi) match {
-          case Some((st, ss, rw, nd)) =>
-            metaLines(outs, st, rw, sstats = ss, ndvs = nd)
-          case None =>
-            // same known-empty exclusion as the DV recompute: an
-            // input that provably holds no rows adds nothing to the
-            // output's range, so its missing stats must not force
-            // the output to always-scan
-            val counted = multi(gi).filterNot(f =>
-              cur.rows.get(f).contains(0L))
-            val entryLists = counted.map(f =>
-              cur.stats.getOrElse(f, Seq.empty))
-            val common =
-              if (entryLists.isEmpty) Set.empty[String]
-              else entryLists.map(_.map(_._1).toSet)
-                .reduce(_ intersect _)
-            val perCol = common.toSeq.sorted.map { c =>
-              val es = entryLists.map(_.find(_._1 == c).get)
-              (c, es.map(_._2).min, es.map(_._3).max)
-            }
-            // string zones merge the same way — min of stored mins /
-            // max of stored maxes by BYTE comparison; stored bounds
-            // are already conservative, so their fold bounds any
-            // output file exactly as soundly
-            val sEntryLists = counted.map(f =>
-              cur.sstats.getOrElse(f, Seq.empty))
-            val sCommon =
-              if (sEntryLists.isEmpty) Set.empty[String]
-              else sEntryLists.map(_.map(_._1).toSet)
-                .reduce(_ intersect _)
-            def hexMin(a: String, b: String): String =
-              if (StrStat.cmp(StrStat.unhex(a), StrStat.unhex(b)) <= 0)
-                a else b
-            def hexMax(a: String, b: String): String =
-              if (StrStat.cmp(StrStat.unhex(a), StrStat.unhex(b)) >= 0)
-                a else b
-            val sPerCol = sCommon.toSeq.sorted.map { c =>
-              val es = sEntryLists.map(_.find(_._1 == c).get)
-              (c, es.map(_._2).reduce(hexMin),
-                es.map(_._3).reduce(hexMax))
-            }
-            val counts = multi(gi).map(cur.rows.get)
-            val nLine =
-              if (outs.size == 1 && counts.forall(_.isDefined))
-                Seq(s"#nrows=${outs.head}|${counts.flatten.sum}")
-              else Seq.empty
-            // NDV sketches merge by register max (HLL union law) —
-            // pure manifest arithmetic, same carry-through contract
-            // as the zone bounds. A multi-output group stamps each
-            // output with the union sketch: per-file it only
-            // over-covers, and the table-level register max over any
-            // subset stays the exact union.
-            val nEntryLists = counted.map(f =>
-              cur.ndvs.getOrElse(f, Seq.empty))
-            val nCommon =
-              if (nEntryLists.isEmpty) Set.empty[String]
-              else nEntryLists.map(_.map(_._1).toSet)
-                .reduce(_ intersect _)
-            val nPerCol = nCommon.toSeq.sorted.map { c =>
-              val es = nEntryLists.map(_.find(_._1 == c).get)
-              val regs = es.map(e => StrStat.unhex(e._3))
-                .reduce(NdvSketch.merge)
-              // histogram counts merge by vector ADD (fixed log
-              // frame) — emitted only when every input carries one
-              val hist =
-                if (es.exists(_._4.isEmpty)) ""
-                else graft.expressions.LogHist.encode(
-                  es.map(e => graft.expressions.LogHist.decode(e._4))
-                    .reduce(graft.expressions.LogHist.merge))
-              (c, es.map(_._2).sum, StrStat.hex(regs), hist)
-            }
-            outs.flatMap(o => perCol.map { case (c, mn, mx) =>
-              s"#stats=$o|$c|$mn|$mx" }) ++
-              outs.flatMap(o => sPerCol.map { case (c, mn, mx) =>
-                s"#sstats=$o|$c|$mn|$mx" }) ++
-              outs.flatMap(o => nPerCol.map {
-                case (c, nulls, regs, hist) =>
-                  s"#ndv=$o|$c|$nulls|$regs|$hist" }) ++ nLine
-        }
-      }
-      after = carried.size + stagedFiles.size
-      Right(cur.metaLinesFor(carried) ++ mergedMetaLines ++
-        carried ++ stagedFiles)
-    }
+    // here, once, instead of at every subsequent read); a group whose
+    // inputs held no live row stages one explicit empty file
+    val staged = stageFrame(
+      maskDvs(spark, withFilePos(src), m0.dvs, multi.flatten)
+        .withColumnRenamed("__b", "__base")
+        .join(broadcast(grpOf.toDF("__base", "__grp")), "__base")
+        .repartition(multi.size, col("__grp"))
+        .select((dataCols.map(col) :+ col("__grp")): _*),
+      table, s"c-${newNonce()}", groups = multi.size)
+    val meta = multi.zip(staged).map { case (inputs, outs) =>
+      // groups that paid down merge-on-read debt: the inputs' manifest
+      // arithmetic no longer bounds their output EXACTLY (the masked
+      // rows may have held the min/max), so re-derive stats + counts
+      // from the rewritten files — one scan of just-written hot data,
+      // only for DV-carrying groups; statsBounds turns exact again the
+      // moment the DVs purge
+      if (inputs.exists(hasDv))
+        fileMeta(spark, table, outs, commonStatCols(m0, inputs))
+      else mergedMeta(m0, inputs, outs)
+    }.reduce(_ ++ _)
+    val (v, after) =
+      publishReplace(table, multi.flatten, staged.flatten, meta, m0.dvs)
     (v, files.size, after)
+  }
+
+  /** The metadata of `outs`, the compacted rewrite of `inputs`, by
+    * pure manifest arithmetic — no data scan. Outputs get MERGED zone
+    * lines for every column all their inputs carry (the union's
+    * min(mins)/max(maxes) bounds any output file exactly; stored
+    * string bounds are already conservative, so their byte-wise fold
+    * is as sound), NDV sketches merged by register max (the HLL union
+    * law) with histograms added, and — for a single output — the
+    * summed row count when every input carries one. A known-empty
+    * input (`#nrows=0`) adds nothing to the output's range, so its
+    * missing stats must not force the output to always-scan. A
+    * multi-output group stamps each output with the union: per-file
+    * it only over-covers, and the table-level register max over any
+    * subset stays the exact union. */
+  private def mergedMeta(m: Manifest, inputs: Seq[String],
+      outs: Seq[String]): Meta = {
+    val counted = inputs.filterNot(f => m.rows.get(f).contains(0L))
+    // (column, every counted input's entry) for each column all of
+    // them carry an entry for
+    def perCol[E](of: Meta => Map[String, Seq[E]])(name: E => String)
+        : Seq[(String, Seq[E])] = {
+      val lists = counted.map(f => of(m.meta).getOrElse(f, Seq.empty))
+      if (lists.isEmpty) Seq.empty
+      else lists.map(_.map(name).toSet).reduce(_ intersect _).toSeq.sorted
+        .map(c => c -> lists.map(_.find(e => name(e) == c).get))
+    }
+    def hexMin(a: String, b: String): String =
+      if (StrStat.cmp(StrStat.unhex(a), StrStat.unhex(b)) <= 0) a else b
+    def hexMax(a: String, b: String): String =
+      if (StrStat.cmp(StrStat.unhex(a), StrStat.unhex(b)) >= 0) a else b
+    import graft.expressions.LogHist
+    val st = perCol(_.stats)(_._1).map { case (c, es) =>
+      (c, es.map(_._2).min, es.map(_._3).max) }
+    val ss = perCol(_.sstats)(_._1).map { case (c, es) =>
+      (c, es.map(_._2).reduce(hexMin), es.map(_._3).reduce(hexMax)) }
+    val nd = perCol(_.ndvs)(_._1).map { case (c, es) =>
+      // histogram counts merge by vector ADD (fixed log frame) —
+      // emitted only when every input carries one
+      (c, es.map(_._2).sum,
+        StrStat.hex(es.map(e => StrStat.unhex(e._3))
+          .reduce(NdvSketch.merge)),
+        if (es.exists(_._4.isEmpty)) ""
+        else LogHist.encode(es.map(e => LogHist.decode(e._4))
+          .reduce(LogHist.merge)))
+    }
+    val counts = inputs.map(m.rows.get)
+    Meta(stats = outs.map(_ -> st).toMap,
+      sstats = outs.map(_ -> ss).toMap,
+      rows =
+        if (outs.size == 1 && counts.forall(_.isDefined))
+          Map(outs.head -> counts.flatten.sum)
+        else Map.empty,
+      ndvs = outs.map(_ -> nd).toMap)
   }
 
   /** Candidate `#pval=` encodings of a user-supplied partition
@@ -2314,66 +2033,28 @@ object ManifestTable {
     val todo = byTuple.filter { case (_, fs) =>
       fs.size > 1 || fs.exists(hasDv) }
     if (todo.isEmpty) return (latest, m0.files.size, m0.files.size)
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
+    val nonce = newNonce()
     // one cached footer-union for the snapshot instead of one
     // mergeSchema job PER PARTITION GROUP in the driver loop below
     val tableSchema = snapshotSchema(spark, table, latest, m0.files)
     val stagedAll = todo.zipWithIndex.map { case ((tuple, fs), gi) =>
       val src = spark.read.schema(tableSchema)
         .parquet(fs.map(f => root.resolve(f).toString): _*)
-      val dataCols = src.columns.toSeq
       val bytes = fs.map(f => Files.size(root.resolve(f))).sum
       val nOut = math.max(1L,
         (bytes + targetBytes - 1) / targetBytes).toInt
-      val outDir = Paths.get(table, "data", s"cp-$nonce-$gi")
-      val counted = fs.filterNot(f => m0.rows.get(f).contains(0L))
-      val common =
-        if (counted.isEmpty) Seq.empty[String]
-        else counted.map(f =>
-            (m0.stats.getOrElse(f, Seq.empty).map(_._1) ++
-              m0.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
-          .reduce(_ intersect _).toSeq.sorted
       // the group's stats pass rides its rewrite job — a single-output
       // group (the common shape at target size) skips the separate
-      // just-written-data scan
-      val (wrapped, fetchMeta) = observeStats(
+      // just-written-data scan; outputs inherit the group's tuple
+      val (outs, meta) = stageObserved(
         maskDvs(spark, withFilePos(src), m0.dvs, fs)
-          .select(dataCols.map(col): _*), common)
-      wrapped.coalesce(nOut)
-        .write.mode("errorifexists").parquet(outDir.toString)
-      val outs = Using.resource(Files.list(outDir)) { st =>
-        st.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-          .toSeq.sorted.map(n => s"data/cp-$nonce-$gi/$n")
-      }
-      val (st, ss, rw, nd) = fetchMeta(outs).getOrElse(
-        fileMeta(spark, outDir.toString,
-          s"data/cp-$nonce-$gi", common, outs))
-      (tuple, outs, st, ss, rw, nd)
+          .select(src.columns.toSeq.map(col): _*).coalesce(nOut),
+        table, s"cp-$nonce-$gi", commonStatCols(m0, fs))
+      (outs, meta ++ Meta(pvals = outs.map(_ -> tuple).toMap))
     }
-    val rewritten = todo.flatMap(_._2).toSet
-    var after = 0
-    val v = publishLoop(table, nonce, "compactPartition") { snapshot =>
-      val cur = manifestOf(table, snapshot.last)
-      require(rewritten.subsetOf(cur.files.toSet),
-        s"concurrent rewrite removed a partition-OPTIMIZE input of " +
-          s"$table — aborting rather than resurrecting dropped rows")
-      require(rewritten.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
-          m0.dvs.getOrElse(f, Seq.empty)),
-        s"concurrent DV landed on a partition-OPTIMIZE input of " +
-          s"$table — aborting rather than resurrecting the rival's " +
-          "deletes")
-      val carried = cur.files.filterNot(rewritten.contains)
-      val stagedLines = stagedAll.flatMap {
-        case (tuple, outs, st, ss, rw, nd) =>
-          metaLines(outs, st, rw, sstats = ss,
-            pvals = outs.map(o => o -> tuple).toMap, ndvs = nd)
-      }
-      val stagedFiles = stagedAll.flatMap(_._2)
-      after = carried.size + stagedFiles.size
-      Right(cur.metaLinesFor(carried) ++ stagedLines ++
-        carried ++ stagedFiles)
-    }
+    val (v, after) = publishReplace(table, todo.flatMap(_._2),
+      stagedAll.flatMap(_._1), stagedAll.map(_._2).reduce(_ ++ _),
+      m0.dvs)
     (v, m0.files.size, after)
   }
 
@@ -2494,9 +2175,7 @@ object ManifestTable {
     val totalBytes = m0.files.map(f => Files.size(root.resolve(f))).sum
     val nOut = math.max(1L,
       (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
-    val stageDir = Paths.get(table, "data", s"cc-$nonce")
-    require(!dataCols.contains("__c") && !dataCols.contains("__bkt"),
+    require(!dataCols.contains("__c") && !dataCols.contains("__grp"),
       s"compactClustered's internal columns collide with a table " +
         s"column of $table")
     val withH = src.withColumn("__h", graft.operators.Layout
@@ -2529,102 +2208,32 @@ object ManifestTable {
         bkt += 1
       pair
     }
+    // buckets stage as dense groups in curve order: the group-prefixed
+    // names keep that order, and a fully-DV'd (zero live rows) snapshot
+    // wrote no bucket — group 0 then stages one explicit empty file so
+    // the snapshot's schema survives the rewrite
+    val bkts = cellBkt.map(_._2).distinct.sorted
+    val rank = bkts.zipWithIndex.toMap
     import spark.implicits._
-    val stage0 = Paths.get(table, "data", s".cc-$nonce-stage")
-    withH
+    val staged = stageFrame(withH
       .withColumn("__c", shiftright(col("__h"), shift))
-      .join(broadcast(cellBkt.toSeq.toDF("__c", "__bkt")), "__c")
-      .repartition(math.max(1, nOut), col("__bkt"))
-      .sortWithinPartitions(col("__bkt"), col("__h"))
-      .select((dataCols.map(col) :+ col("__bkt")): _*)
-      .write.mode("errorifexists").partitionBy("__bkt")
-      .parquet(stage0.toString)
-    // flatten the partitioned staging layout into the final stage dir
-    // with bucket-prefixed names: curve order survives in the file
-    // names, and names stay unique even when one task wrote several
-    // buckets' files
-    Files.createDirectories(stageDir)
-    val distinctBkts = cellBkt.map(_._2).distinct.sorted
-    distinctBkts.foreach { b =>
-      val pdir = stage0.resolve(s"__bkt=$b")
-      if (Files.isDirectory(pdir)) {
-        Using.resource(Files.list(pdir)) { st =>
-          st.iterator().asScala
-            .map(_.getFileName.toString)
-            .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-            .toSeq.sorted.zipWithIndex
-            .foreach { case (n, i) =>
-              Files.move(pdir.resolve(n),
-                stageDir.resolve(f"part-b$b%05d-$i%03d-$nonce.parquet"))
-            }
-        }
-      }
-    }
-    deleteRecursively(stage0)
-    // a fully-DV'd (zero live rows) snapshot wrote no bucket: stage
-    // one explicit empty file so the snapshot's schema survives the
-    // rewrite (compact's empty-group rule)
-    if (distinctBkts.isEmpty) {
-      val tmpE = Paths.get(table, "data", s".cc-$nonce-empty")
-      src.limit(0).select(dataCols.map(col): _*).coalesce(1)
-        .write.mode("errorifexists").parquet(tmpE.toString)
-      Using.resource(Files.list(tmpE)) { st =>
-        st.iterator().asScala
-          .map(_.getFileName.toString)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-          .toSeq.sorted.zipWithIndex
-          .foreach { case (n, i) =>
-            Files.move(tmpE.resolve(n),
-              stageDir.resolve(f"part-b00000-$i%03d-$nonce.parquet"))
-          }
-      }
-      deleteRecursively(tmpE)
-    }
-    val staged = Using.resource(Files.list(stageDir)) { st =>
-      st.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-        .toSeq.sorted
-        .map(n => s"data/cc-$nonce/$n")
-    }
+      .join(broadcast(cellBkt.toSeq.map { case (c, b) => (c, rank(b)) }
+        .toDF("__c", "__grp")), "__c")
+      .repartition(math.max(1, nOut), col("__grp"))
+      .sortWithinPartitions(col("__grp"), col("__h"))
+      .select((dataCols.map(col) :+ col("__grp")): _*),
+      table, s"cc-${newNonce()}", groups = math.max(1, bkts.size))
+      .flatten
     // stats: the cluster columns (that's what the layout now serves)
     // plus whatever every counted input already carried
-    val counted = m0.files.filterNot(f => m0.rows.get(f).contains(0L))
-    val prevCols =
-      if (counted.isEmpty) Seq.empty[String]
-      else counted.map(f =>
-          (m0.stats.getOrElse(f, Seq.empty).map(_._1) ++
-            m0.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
-        .reduce(_ intersect _).toSeq
-    val statsCols = (clusterCols ++ prevCols).distinct.sorted
-    val (newStats, newSStats, newRows, newNdvs) =
-      if (staged.isEmpty)
-        (noStats, noSStats, Map.empty[String, Long], noNdvs)
-      else fileMeta(spark, stageDir.toString, s"data/cc-$nonce",
-        statsCols, staged)
-    val rewritten = m0.files.toSet
-    var after = 0
-    val v = publishLoop(table, nonce, "compactClustered") { snapshot =>
-      val cur = manifestOf(table, snapshot.last)
-      require(rewritten.subsetOf(cur.files.toSet),
-        s"concurrent rewrite removed a clustered-OPTIMIZE input of " +
-          s"$table — aborting rather than resurrecting dropped rows")
-      require(rewritten.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
-          m0.dvs.getOrElse(f, Seq.empty)),
-        s"concurrent DV landed on a clustered-OPTIMIZE input of " +
-          s"$table — aborting rather than resurrecting the rival's " +
-          "deletes")
-      val carried = cur.files.filterNot(rewritten.contains)
-      after = carried.size + staged.size
-      Right(cur.metaLinesFor(carried) ++
-        metaLines(staged, newStats, newRows, sstats = newSStats,
-          ndvs = newNdvs) ++
-        carried ++ staged)
-    }
+    val meta = fileMeta(spark, table, staged,
+      (clusterCols ++ commonStatCols(m0, m0.files)).distinct.sorted)
+    val (v, after) =
+      publishReplace(table, m0.files, staged, meta, m0.dvs)
     (v, m0.files.size, after)
   }
 
-  private def deleteRecursively(p: Path): Unit =
+  private[sources] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       Using.resource(Files.walk(p)) { st =>
         st.sorted(java.util.Comparator.reverseOrder[Path]())

@@ -1613,6 +1613,29 @@ class PipelineSpec extends SparkSpec {
         dvMaxFraction = 0.5)
     }
     assert(exB.getMessage.contains("not live"), exB.getMessage)
+    def stagedDx(dir: String): Seq[String] = {
+      val st = Files.list(java.nio.file.Paths.get(dir, "data"))
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(st.iterator())
+        .asScala.map(_.getFileName.toString).filter(_.startsWith("dx-"))
+        .toSeq
+      finally st.close()
+    }
+    assert(stagedDx(dirB).isEmpty, s"abort left ${stagedDx(dirB)}")
+    // (b') an over-budget delete stages its copy-on-write rewrite
+    // before the publish sees the rival DV: the abort drops it
+    val dirD = mk()
+    val relD = ManifestTable.snapshotFor(dirD, None).files.head
+    ManifestTable.deleteRangeDv(spark, dirD, "k", 1L, 2L,
+      dvMaxFraction = 1.0) // the rival
+    val exD = intercept[IllegalArgumentException] {
+      ManifestTable.applyDeltaCommit(spark, dirD,
+        deletes = Map(relD -> Seq(5L)), staged = Seq.empty,
+        stats = Map.empty, sstats = Map.empty, rows = Map.empty,
+        pvals = Map.empty, expectDvs = Map.empty,
+        dvMaxFraction = 0.0) // forces the rewrite
+    }
+    assert(exD.getMessage.contains("concurrent DV"), exD.getMessage)
+    assert(stagedDx(dirD).isEmpty, s"abort left ${stagedDx(dirD)}")
     // (c) rival APPEND rides along: the delta publishes against the
     // new latest, both the appended file and the DV land
     val dirC = mk()

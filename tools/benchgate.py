@@ -13,9 +13,14 @@ Queries with adjusted_ratio > THRESHOLD (default 2.0, the judge's
 perf-weak line) are flagged; queries present in the run but missing
 from the floor file are listed so the next freeze covers them.
 
+A run whose artifact lists any query under "failed" (a query that
+threw in some pass and so has no timing) is refused outright, whatever
+the timings say.
+
 Usage:
     python3 tools/benchgate.py [bench.json] [--threshold 2.0]
-    # exit 0 = clean, exit 1 = flags raised (usable as a round gate)
+    # exit 0 = clean, exit 1 = flags raised or queries failed
+    # (usable as a round gate)
 
 Run it right after any full bench so excursions are caught the day
 they land, not at round end (round-10 verdict stretch item).
@@ -82,9 +87,12 @@ def main():
               f"floor  ({raw:.2f}x raw, {adj:.2f}x adjusted)")
     if missing:
         print(f"  no floor (freeze these next): {', '.join(missing)}")
-    if not flagged and not watch and not missing:
+    failed = bench.get("failed") or []
+    for name in failed:
+        print(f"  FAIL  {name:<32} threw during the run (no timing)")
+    if not flagged and not watch and not missing and not failed:
         print("  clean: every query within budget")
-    sys.exit(1 if flagged else 0)
+    sys.exit(1 if flagged or failed else 0)
 
 
 if __name__ == "__main__":
